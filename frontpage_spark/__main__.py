@@ -73,7 +73,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.cmd == "ingest":
             from pyspark.sql import functions as F
 
-            from .pipeline import dedup_new_keys, write_append
+            from .pipeline import dedup_new_keys, empty_keys, write_append
             from .sources import assemble_raw, fetch_documents
 
             html_dir = args.html_dir
@@ -98,7 +98,7 @@ def main(argv: list[str] | None = None) -> int:
             try:
                 existing = spark.read.parquet(args.out).select("uniq_id")
             except Exception:
-                existing = spark.createDataFrame([], "uniq_id string")
+                existing = empty_keys(spark)
             write_append(dedup_new_keys(raw, existing), args.out)
             n_dead = fetched.filter(F.col("error").isNotNull()).count()
             print(
@@ -106,7 +106,7 @@ def main(argv: list[str] | None = None) -> int:
                 f" ({n_dead} dead-lettered fetches)"
             )
         elif args.cmd == "etl":
-            from .pipeline import run_batch, to_compat, write_append
+            from .pipeline import empty_keys, run_batch, to_compat, write_append
             from .sources import csv_dimension
 
             raw = spark.read.parquet(args.raw)
@@ -114,7 +114,7 @@ def main(argv: list[str] | None = None) -> int:
             try:
                 existing = spark.read.parquet(args.out).select("uniq_id")
             except Exception:
-                existing = spark.createDataFrame([], "uniq_id string")
+                existing = empty_keys(spark)
             if args.stream:
                 from .incremental import stream_pipeline
 

@@ -138,7 +138,7 @@ def insert_if_absent(
     dedup + anti-join against the sink's key set (projected
     server-side), then append. Idempotent under replay — the exact
     contract ``dedup_new_keys`` gives the parquet sink."""
-    from .pipeline import dedup_new_keys
+    from .pipeline import dedup_new_keys, empty_keys
 
     spark = df.sparkSession
     try:
@@ -148,7 +148,7 @@ def insert_if_absent(
         existing.schema
     except Exception:
         # first batch: no sink table yet — JDBC append creates it
-        existing = spark.createDataFrame([], f"{key} string")
+        existing = empty_keys(spark, key)
     dedup_new_keys(df, existing, key=key).write.format("jdbc").options(
         **_opts(url, properties)
     ).option("dbtable", table).mode("append").save()

@@ -6,7 +6,15 @@ declarative Catalyst plan.
 Plan shape: scan(raw) → pandas-UDF HTML extraction (one stage) →
 native column exprs → broadcast join (dim) → anti-join against sink
 keys → append. The only wide operation is the sink anti-join; the
-dimension join is a broadcast (≤479-row class table).
+dimension join is a broadcast of a driver-local relation
+(``sources.csv_dimension`` reads the ≤479-row class table once).
+
+The plan forks into two sinks at ``validate_batch`` (dead letters and
+clean rows). The fork point is kept with ``plans.keep()``: the
+quarantine write fills the cache and the sink write reads
+``InMemoryTableScan``, so HTML extraction runs once per row, as in the
+reference's loop. The cache is bounded by keep()'s cap of 8 frames
+and drained by ``plans.release_kept()``.
 """
 
 from __future__ import annotations
@@ -14,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from . import functions as FF, html
+from . import functions as FF, html, plans
 
 
 def derive_clean(with_h: DataFrame) -> DataFrame:
@@ -80,14 +88,17 @@ def enrich(clean: DataFrame, site_map: DataFrame, strict: bool = True) -> DataFr
 
 def to_compat(df: DataFrame) -> DataFrame:
     """Reference-compatibility boundary (SURVEY.md §1.4): arrays become
-    ';'-joined strings, NULL strings become ''. Timestamps stay typed."""
-    out = df
+    ';'-joined strings, NULL strings become ''. Timestamps stay typed.
+    One projection, same column order."""
+    cols = []
     for c, t in df.dtypes:
         if t.startswith("array"):
-            out = out.withColumn(c, FF.compat_join_array(c))
+            cols.append(FF.compat_join_array(c).alias(c))
         elif t == "string":
-            out = out.withColumn(c, FF.empty_on_null(c))
-    return out
+            cols.append(FF.empty_on_null(c).alias(c))
+        else:
+            cols.append(F.col(c))
+    return df.select(cols)
 
 
 def dedup_new_keys(batch: DataFrame, existing: DataFrame, key: str = "uniq_id") -> DataFrame:
@@ -95,6 +106,13 @@ def dedup_new_keys(batch: DataFrame, existing: DataFrame, key: str = "uniq_id") 
     in-batch dedup + anti-join against keys already in the sink."""
     deduped = batch.dropDuplicates([key])
     return deduped.join(existing.select(key), key, "left_anti")
+
+
+def empty_keys(spark, key: str = "uniq_id") -> DataFrame:
+    """The key set of an empty sink, for ``dedup_new_keys``. Built on
+    the JVM (an empty range), so the optimizer drops the anti-join; a
+    ``createDataFrame([])`` frame is Python-backed and costs a job."""
+    return spark.range(0).select(F.lit(None).cast("string").alias(key))
 
 
 def write_append(df: DataFrame, path: str) -> None:
@@ -128,13 +146,23 @@ def validate_batch(clean: DataFrame, site_map: DataFrame) -> tuple[DataFrame, Da
     rows with an unknown site_id (the reference's KeyError) or an
     unparseable post_date are quarantined WITH a reason column, so the
     channel is durable, inspectable, and replayable.
+
+    Both outputs read one kept frame (``plans.keep()``), the fork point
+    of the batch's plan: whichever sink writes first fills the cache
+    and the other reads ``InMemoryTableScan``, so the HTML extraction
+    upstream runs once per row instead of once per sink. The cache is
+    bounded by keep()'s cap of 8 frames (the oldest is evicted, and an
+    evicted frame recomputes from lineage) and drained by
+    ``plans.release_kept()``.
     """
     known = F.broadcast(site_map.select("site_id").distinct().withColumn("__known", F.lit(1)))
-    flagged = clean.join(known, "site_id", "left").withColumn(
-        "__reason",
-        F.when(F.col("__known").isNull(), F.lit("unknown_site_id")).when(
-            F.col("post_date").isNull(), F.lit("unparseable_post_date")
-        ),
+    flagged = plans.keep(
+        clean.join(known, "site_id", "left").withColumn(
+            "__reason",
+            F.when(F.col("__known").isNull(), F.lit("unknown_site_id")).when(
+                F.col("post_date").isNull(), F.lit("unparseable_post_date")
+            ),
+        )
     )
     good = flagged.filter(F.col("__reason").isNull()).drop("__known", "__reason")
     bad = (

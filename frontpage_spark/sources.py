@@ -224,11 +224,17 @@ def assemble_raw(fetched: DataFrame) -> DataFrame:
 
 def csv_dimension(spark: SparkSession, path: str, column_map: dict[str, str] | None = None) -> DataFrame:
     """S5 — CSV dimension source (reference: dict keyed on site_id,
-    etl_process.py:185-200). Small table; callers wrap in broadcast()."""
+    etl_process.py:185-200). Small table; callers wrap in broadcast().
+
+    The table is read once, when called, into a driver-local relation
+    (a ``LocalRelation`` with Arrow on): like the reference's dict it
+    is a snapshot, so later edits to the CSV are not seen, and each
+    broadcast of it ships the rows without scanning the file again.
+    Blank fields stay NULL."""
     df = spark.read.option("header", True).csv(path)
     if column_map:
         df = df.select([F.col(src).alias(dst) for src, dst in column_map.items()])
-    return df
+    return spark.createDataFrame(df.toPandas(), schema=df.schema)
 
 
 def text_params(spark: SparkSession, path: str) -> DataFrame:

@@ -76,6 +76,54 @@ def test_to_compat_boundary(spark, raw):
     assert row1["phone"] == "5551234567;5559876543"
 
 
+def test_to_compat_one_projection_keeps_order_and_types(spark, raw):
+    clean = clean_projection(raw).withColumn("n", F.lit(7))
+    out = to_compat(clean)
+    assert out.columns == clean.columns
+    types = dict(out.dtypes)
+    assert types["post_date"] == types["scrape_date"] == "timestamp"
+    assert types["n"] == "int"
+    assert types["phone"] == types["other_ads"] == types["post_title"] == "string"
+    # one Project on top of the input's plan, not one per rewritten column
+    plan = out._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "Project"
+    assert plan.children().apply(0).equals(clean._jdf.queryExecution().analyzed())
+
+
+def _operators(node) -> list[str]:
+    """Physical operator names of ``node``'s own plan. Descends into
+    adaptive wrappers and query stages, but not into the plan that
+    filled a cached relation (InMemoryTableScan is a leaf)."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return _operators(node.executedPlan())
+    if cls.endswith("QueryStageExec"):
+        return _operators(node.plan())
+    kids = node.children()
+    return [node.nodeName()] + [
+        name for i in range(kids.size()) for name in _operators(kids.apply(i))
+    ]
+
+
+def test_validate_batch_extracts_html_once(spark, raw, site_map, tmp_path):
+    """The quarantine write fills the kept fork point, so the sink side
+    reads the cache instead of running the HTML Arrow UDF again."""
+    from frontpage_spark import plans
+    from frontpage_spark.pipeline import quarantine_append, validate_batch
+
+    try:
+        good, bad = validate_batch(clean_projection(raw), site_map)
+        quarantine_append(bad, str(tmp_path / "quarantine"))
+        existing = spark.createDataFrame([("none",)], ["uniq_id"])
+        out = to_compat(dedup_new_keys(enrich(good, site_map), existing))
+        ops = _operators(out._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScan" in ops
+        assert "ArrowEvalPython" not in ops
+        assert sorted(r["uniq_id"] for r in out.collect()) == ["k1", "k2"]
+    finally:
+        plans.release_kept()
+
+
 def test_enrich_inner_semantics(spark, raw, site_map):
     clean = clean_projection(raw)
     got = enrich(clean, site_map, strict=True)
@@ -128,6 +176,7 @@ def test_conform_invariants(spark):
 
 
 def test_validate_batch_quarantines_with_reason(spark, raw, site_map, tmp_path):
+    from frontpage_spark import plans
     from frontpage_spark.pipeline import quarantine_append, validate_batch
 
     clean = clean_projection(raw)
@@ -149,6 +198,7 @@ def test_validate_batch_quarantines_with_reason(spark, raw, site_map, tmp_path):
     from frontpage_spark.incremental import exclude_dead_letter
 
     assert exclude_dead_letter(clean_bad, back).count() == 1
+    plans.release_kept()
 
 
 def test_merge_upsert_idempotent_and_inserts(spark, tmp_path):

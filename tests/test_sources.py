@@ -21,9 +21,14 @@ def test_load_table_nano_ts(spark):
 
 def test_csv_dimension(spark, tmp_path):
     p = tmp_path / "dim.csv"
-    p.write_text("site_id,city,state\nnyc,New York,NY\nsfo,San Francisco,CA\n")
+    p.write_text("site_id,city,state\nnyc,New York,NY\nsfo,San Francisco,CA\nsea,,WA\n")
     df = csv_dimension(spark, str(p))
-    assert sorted(r["site_id"] for r in df.collect()) == ["nyc", "sfo"]
+    # read once when called: a driver-local relation, not a file scan
+    assert df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    p.write_text("site_id,city,state\nzzz,Nowhere,ZZ\n")
+    cities = {r["site_id"]: r["city"] for r in df.collect()}
+    assert sorted(cities) == ["nyc", "sea", "sfo"]  # a snapshot, like the reference's dict
+    assert cities["sea"] is None  # a blank field is NULL, not ''
     mapped = csv_dimension(spark, str(p), {"site_id": "id", "city": "town"})
     assert mapped.columns == ["id", "town"]
 
