@@ -72,10 +72,10 @@ def _band_minhashes_sql(shingle_col: str, bands: int = DEFAULT_BANDS) -> Column:
     """:func:`band_minhashes` as ONE ``F.expr`` over a NAMED shingle
     column — the identical expression tree (same single-binding md5
     idiom), parsed by the JVM in one py4j roundtrip. The lambda-builder
-    form above costs ~150 ms of py4j chatter per plan build, and the
-    dedup queries rebuild their plans every call (keep() makes them
-    plan-cache-ineligible by design), so construction cost is a real
-    per-query tax at bench scale (r11; same output, oracle-checked)."""
+    form above costs ~150 ms of py4j chatter per plan build, and every
+    query rebuilds its plan on each call, so construction cost is a
+    real per-query tax at bench scale (r11; same output,
+    oracle-checked)."""
     mins = ", ".join(
         f"array_min(transform(hs, h -> substring(h, {1 + 8 * b}, 8)))"
         for b in range(bands)
@@ -512,6 +512,13 @@ def hamming_near_dup(
     signatures that agree on 16 bits, so bucket width is bounded by the
     corpus's true duplicate structure (cf. the LSH degenerate-bucket
     guard; dHash of non-duplicate content is ~uniform on 2^16 per band).
+
+    The band value is an ``int``: (int band, int bv) packs into one long
+    join key, so a broadcast build side is a small long-keyed relation.
+    With a ``bigint`` value the key is 96 bits wide and Spark builds a
+    ``BytesToBytesMap`` relation instead, whose first page alone is
+    ``spark.buffer.pageSize`` (64 MB with the default 8g driver) however
+    few rows it holds.
     """
     if max_hamming > 3:
         raise ValueError("4x16 banding is only lossless for max_hamming <= 3")
@@ -524,7 +531,7 @@ def hamming_near_dup(
                 F.shiftright(lo, 16).bitwiseAND(F.lit(65535)),
                 hi.bitwiseAND(F.lit(65535)),
                 F.shiftright(hi, 16).bitwiseAND(F.lit(65535)),
-            )
+            ).cast("array<int>")
         ).alias("band", "bv"),
     )
     # both join sides read `banded`; without a cache the upstream

@@ -18,9 +18,12 @@ co-location across many jobs):
 
 from __future__ import annotations
 
+import gc
 import os
 import threading
+import time
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 SALT_COL = "__salt"
@@ -46,35 +49,6 @@ _KEPT: list[DataFrame] = []
 _KEPT_MAX = 8
 _KEPT_LOCK = threading.Lock()
 
-# Active keep() listeners (ADVICE r11): a caller that needs to know
-# which frames were kept during a code region (the prepared-plan
-# cache's kept_new detection) registers a list here and every keep()
-# appends to it. This replaces the old id()-snapshot diff of _KEPT,
-# which could silently MISS a new keep when a pre-existing frame was
-# FIFO-evicted and garbage-collected mid-build (a recycled id()), and
-# lost early keeps whenever a build registered more than _KEPT_MAX
-# frames.
-_KEEP_LISTENERS: list[list] = []
-
-
-def keep_capture_start() -> list:
-    """Begin capturing keep() registrations; returns the capture list.
-    Pair with :func:`keep_capture_stop`."""
-    captured: list = []
-    with _KEPT_LOCK:
-        _KEEP_LISTENERS.append(captured)
-    return captured
-
-
-def keep_capture_stop(captured: list) -> list:
-    """Stop a capture started by :func:`keep_capture_start`."""
-    with _KEPT_LOCK:
-        for i, ex in enumerate(_KEEP_LISTENERS):
-            if ex is captured:
-                del _KEEP_LISTENERS[i]
-                break
-    return captured
-
 
 def keep(df: DataFrame) -> DataFrame:
     """Persist ``df`` for reuse across plan branches / fixpoint rounds,
@@ -83,8 +57,6 @@ def keep(df: DataFrame) -> DataFrame:
     df = df.persist()
     evict: list[DataFrame] = []
     with _KEPT_LOCK:
-        for listener in _KEEP_LISTENERS:
-            listener.append(df)
         # identity scan, not list.remove(): DataFrame.__eq__ builds a
         # Column, so equality-based membership would be nonsense here
         for i, ex in enumerate(_KEPT):
@@ -103,8 +75,10 @@ def keep(df: DataFrame) -> DataFrame:
 
 
 def release_kept() -> int:
-    """Unpersist every keep()-registered frame (harness/test hook for
-    deterministic teardown); returns how many were released."""
+    """Unpersist every keep()-registered frame, then let the JVM drop
+    every object that only dead Python handles still pin (harness/test
+    hook for deterministic teardown); returns how many frames were
+    released."""
     with _KEPT_LOCK:
         dfs = list(_KEPT)
         _KEPT.clear()
@@ -115,7 +89,27 @@ def release_kept() -> int:
             n += 1
         except Exception:
             pass
+    dfs = df = None  # this frame's references would keep the last frame alive
+    _release_dead_handles()
     return n
+
+
+def _release_dead_handles() -> None:
+    """Collect dead py4j handles and wait until the JVM has been told.
+
+    A handle whose Java methods were called sits in a reference cycle
+    (``JavaObject`` <-> its cached ``JavaMember``), so only a full
+    collection frees it, and py4j's pinned-thread client sends the
+    deletes from a finalizer thread that polls its queue once a second.
+    Until both have happened the JVM keeps every finished query's plan
+    reachable, with its shuffles, broadcasts and metrics, and releases
+    them a GC cycle or two later at a time that depends on that poll."""
+    gc.collect()
+    client = getattr(SparkContext._gateway, "_gateway_client", None)
+    pending = getattr(client, "finalizer_deque", None)  # None: deletes are synchronous
+    deadline = time.monotonic() + 3.0
+    while pending and time.monotonic() < deadline:
+        time.sleep(0.01)
 
 
 def _resolve_ckpt_dir(master: str, app_id: str) -> str:

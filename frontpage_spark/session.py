@@ -70,15 +70,9 @@ def tune(spark: SparkSession, sf_dir: str | None = None) -> SparkSession:
         parts = min(8, default_parallelism())
     else:
         parts = default_parallelism()
+    conf["spark.sql.shuffle.partitions"] = str(parts)
     for k, v in conf.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # non-runtime conf on some builds — keep going
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    except Exception:
-        pass
+        spark.conf.set(k, v)
     return spark
 
 

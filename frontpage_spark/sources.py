@@ -81,10 +81,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ts_cols = NORMALIZE_TS_COLUMNS.get(name, ())
     if ts_cols:
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     for c in ts_cols:
         dt = dict(df.dtypes).get(c)

@@ -164,3 +164,16 @@ def test_pg_insert_on_conflict_sql_matches_reference_shape():
         'INSERT INTO backpage_raw ("id", "uniq_id", "ad") VALUES (%s, %s, %s) '
         'ON CONFLICT ("uniq_id") DO NOTHING'
     )
+
+
+def test_jdbc_identifier_validation():
+    from frontpage_spark.jdbc import _check_ident, _pg_quote, pg_insert_on_conflict_sql
+
+    assert _check_ident("ads_raw") == "ads_raw"
+    assert _check_ident("app.ads_raw") == "app.ads_raw"
+    for bad in ('ads"; DROP TABLE x; --', "a b", 'x"y', "1tab", ""):
+        with pytest.raises(ValueError):
+            _check_ident(bad)
+    assert _pg_quote('we"ird') == '"we""ird"'
+    sql = pg_insert_on_conflict_sql("t", ["a", 'b"c'], key="k")
+    assert '"b""c"' in sql and 'ON CONFLICT ("k") DO NOTHING' in sql

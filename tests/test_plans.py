@@ -552,3 +552,61 @@ def test_triangle_local_matches_distributed(spark, monkeypatch):
         dist = q.QUERIES["triangle_count_copurchase"].__wrapped__(spark, sf).collect()
         monkeypatch.undo()
         assert [tuple(r) for r in local] == [tuple(r) for r in dist], sf
+
+
+def test_keep_lru_touch():
+    # re-keep()ing the same frame must move it to the young end, not
+    # double-register it (ADVICE r4)
+    from frontpage_spark import plans
+
+    class FakeDF:
+        def __init__(self):
+            self.persists = 0
+            self.unpersists = 0
+
+        def persist(self):
+            self.persists += 1
+            return self
+
+        def unpersist(self):
+            self.unpersists += 1
+            return self
+
+    old_kept, old_max = plans._KEPT[:], plans._KEPT_MAX
+    plans._KEPT.clear()
+    try:
+        plans._KEPT_MAX = 3
+        hot = FakeDF()
+        plans.keep(hot)
+        fillers = [FakeDF() for _ in range(2)]
+        for f in fillers:
+            plans.keep(f)
+        plans.keep(hot)  # LRU touch — must NOT evict anything
+        assert hot.unpersists == 0
+        assert len(plans._KEPT) == 3
+        assert plans._KEPT[-1] is hot
+        # one more registration now evicts the OLDEST filler, not hot
+        plans.keep(FakeDF())
+        assert hot.unpersists == 0
+        assert fillers[0].unpersists == 1
+    finally:
+        plans._KEPT[:] = old_kept
+        plans._KEPT_MAX = old_max
+
+
+def test_release_kept_releases_dead_jvm_handles(spark):
+    # a kept frame's JVM Dataset, once unpersisted and unreferenced in
+    # Python, is gone from the py4j gateway when release_kept() returns,
+    # not whenever a later collection and py4j's finalizer thread get to it
+    from py4j.java_gateway import JavaObject
+    from py4j.protocol import Py4JError
+
+    from frontpage_spark import plans
+
+    df = plans.keep(spark.range(3).selectExpr("id * 2 AS x"))
+    assert df.count() == 3  # a method call on the handle: now in a ref cycle
+    target = df._jdf._target_id
+    del df
+    plans.release_kept()
+    with pytest.raises(Py4JError, match="does not exist"):
+        JavaObject(target, spark.sparkContext._gateway._gateway_client).toString()

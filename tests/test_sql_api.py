@@ -188,9 +188,26 @@ def test_recursion_rail_scoped_to_cloned_session(spark, tmp_path):
     for t in ("customer", "orders", "nation"):
         load_table(spark, str(sf), t)
 
-    before = spark.conf.get("spark.sql.cteRecursionRowLimit", "1000000")
-    df = QUERIES["recursive_ancestor_depths"](spark, str(sf))
-    assert spark.conf.get("spark.sql.cteRecursionRowLimit", "1000000") == before
+    # a full clone cache: the new clone must evict only the oldest entry
+    from frontpage_spark.queries import _RECURSION_SESSIONS
+
+    saved = dict(_RECURSION_SESSIONS)
+    _RECURSION_SESSIONS.clear()
+    dummies = [("dummy-app", f"/dummy/{i}") for i in range(16)]
+    for k in dummies:
+        _RECURSION_SESSIONS[k] = spark
+    try:
+        before = spark.conf.get("spark.sql.cteRecursionRowLimit", "1000000")
+        df = QUERIES["recursive_ancestor_depths"](spark, str(sf))
+        assert spark.conf.get("spark.sql.cteRecursionRowLimit", "1000000") == before
+        assert (spark.sparkContext.applicationId, str(sf)) in _RECURSION_SESSIONS
+        assert len(_RECURSION_SESSIONS) == 16
+        assert dummies[0] not in _RECURSION_SESSIONS
+        assert all(k in _RECURSION_SESSIONS for k in dummies[1:])
+    finally:
+        for k in dummies:
+            _RECURSION_SESSIONS.pop(k, None)
+        _RECURSION_SESSIONS.update(saved)
     # the frame itself runs (on the cloned session's raised rail):
     # 50k keys x up to 6 digits -> >1M total recursion rows
     rows = {r["d"]: r["n"] for r in df.collect()}

@@ -19,15 +19,16 @@ def main() -> None:
 
     import frontpage_spark.ext.similarity as S
     from frontpage_spark import plans
-    from frontpage_spark.queries import QUERIES, _t
+    from frontpage_spark.queries import QUERIES
     from frontpage_spark.session import get_spark
+    from frontpage_spark.sources import load_table
 
     spark = get_spark("ab_kmeans")
     spark.sparkContext.setLogLevel("ERROR")
     QUERIES["global_minmax"](spark, sf_dir).collect()
 
     def run_variant(use_keep: bool) -> float:
-        emb = _t(spark, sf_dir, "embeddings")
+        emb = load_table(spark, sf_dir, "embeddings")
         feat = emb.select(F.col("vec_id"), F.col("embedding"))
         if use_keep:
             feat = plans.keep(feat)

@@ -49,7 +49,7 @@ def main() -> None:
 
     print(f"{'query':<34} {'build':>7} {'exec':>7} {'total':>7} {'jobs':>5} {'stages':>6}")
     for name in names:
-        # one cold to populate plan cache / codegen, then measure warm
+        # one cold run to warm the table loads and codegen, then measure warm
         QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         spark.catalog.clearCache()
         best = None
